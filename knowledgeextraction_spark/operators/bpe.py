@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .bounded import bounded_collect
 from .dedup import _materialize, normalized_text
 
 N_MERGES = 20
@@ -163,8 +164,8 @@ def train_bpe(
     depend on where the loop runs."""
     wf = word_freq_table(docs)
     if driver_vocab_rows > 0:
-        head = wf.limit(driver_vocab_rows + 1).collect()
-        if len(head) <= driver_vocab_rows:
+        head = bounded_collect(wf, driver_vocab_rows)
+        if head is not None:
             return _train_on_freqs(
                 [(r["word"], r["freq"]) for r in head], n_merges
             )

@@ -30,20 +30,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .bounded import DRIVER_MAX_ROWS, bounded_collect
+
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
     rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     return edges.unionByName(rev).filter(F.col("src") != F.col("dst")).distinct()
 
 
-def _driver_components(edges: DataFrame) -> DataFrame:
+def _driver_components(spark, edges: list) -> DataFrame:
     """Union-find on the driver for dimension-scale edge sets.
 
     An iterative distributed CC over a 300-row graph costs ~6 blocking
     shuffle rounds; a dictionary-sized graph is driver work. The
     distributed path below stays the scale path (and is what tests
     exercise with driver_threshold=0)."""
-    spark = edges.sparkSession
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -53,13 +54,11 @@ def _driver_components(edges: DataFrame) -> DataFrame:
             x = parent[x]
         return x
 
-    for row in edges.collect():
+    for row in edges:
         a, b = find(row[0]), find(row[1])
         if a != b:
             parent[max(a, b)] = min(a, b)
     rows = [(n, find(n)) for n in list(parent)]
-    if not rows:
-        return spark.createDataFrame([], "id long, component long")
     return spark.createDataFrame(rows, "id long, component long")
 
 
@@ -67,7 +66,7 @@ def connected_components(
     edges: DataFrame,
     max_iter: int = 30,
     use_local_checkpoint: bool = True,
-    driver_threshold: int = 100_000,
+    driver_threshold: int = DRIVER_MAX_ROWS,
 ) -> DataFrame:
     """edges(src long, dst long) undirected → (id long, component long).
 
@@ -77,8 +76,12 @@ def connected_components(
     union-find (adaptive local-vs-distributed, exact same result);
     larger graphs run the iterative min-label-propagation below.
     """
-    if driver_threshold > 0 and edges.limit(driver_threshold + 1).count() <= driver_threshold:
-        return _driver_components(edges.filter(F.col("src") != F.col("dst")))
+    if driver_threshold > 0:
+        rows = bounded_collect(
+            edges.filter(F.col("src") != F.col("dst")), driver_threshold
+        )
+        if rows is not None:
+            return _driver_components(edges.sparkSession, rows)
 
     adj = _symmetrize(edges)
     if use_local_checkpoint:

@@ -30,6 +30,8 @@ two-stage quantization pattern), so engine-order float-sum drift is
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -733,10 +735,16 @@ def quality_lr_scores(
         the array-literal build bit-equal on every fixture row —
         pytest).  repr() doubles round-trip exactly through Jackson's
         correctly-rounded parse; the declared array<double> schema
-        pins the type (no DECIMAL inference)."""
-        js = "[" + ",".join(
-            repr(w_map.get(b, 0.0)) for b in range(-1, N_BUCKETS)
-        ) + "]"
+        pins the type (no DECIMAL inference).  Non-finite weights are
+        refused: repr() gives inf/nan, which Jackson does not parse,
+        and the PERMISSIVE from_json would turn every score NULL."""
+        ws = [w_map.get(b, 0.0) for b in range(-1, N_BUCKETS)]
+        if not all(map(math.isfinite, ws)):
+            raise ValueError(
+                "quality_lr_scores: non-finite weight (training diverged; "
+                "lower lr)"
+            )
+        js = "[" + ",".join(map(repr, ws)) + "]"
         return F.expr(
             "round(aggregate(zip_with(xs, transform(buckets, "
             f"b -> element_at(from_json('{js}', 'array<double>'), "

@@ -41,7 +41,10 @@ def emit_triples(
     records: DataFrame,
     rules: DataFrame,
 ) -> DataFrame:
-    """→ (subj_id, predicate, obj_id, url, rec_id) distinct.
+    """→ (subj_id, predicate, obj_id, url, rec_id), one row per matching
+    mention pair and rule, NOT deduplicated: canonicalized_triples,
+    which rewrites the ids, ends in the one distinct (a distinct here
+    too would be a second shuffle removing the same duplicates).
 
     linked_mentions: (url, rec_id, start_pos, end_pos, label_type,
     surface, entity_id); records: (url, rec_id, text); rules:
@@ -85,7 +88,6 @@ def emit_triples(
             "url",
             "rec_id",
         )
-        .distinct()
     )
     return out
 

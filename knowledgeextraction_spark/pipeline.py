@@ -18,6 +18,15 @@ Partitioning [NORTH]: the triples sink is written partitioned by
 ``predicate`` (low cardinality — one dir per relation) and bucketed by
 ``subj_id`` hash into ``n_buckets`` files per partition, the parquet
 stand-in for Iceberg's ``partitionedBy(pred, bucket(N, subj_id))``.
+
+Dimension tables: the surface dictionary (linked stage) and the entity
+→ canonical component map (triples stage) are resolved once per
+pipeline, by the first stage that joins one (``DimensionTables``). At
+or below ``DRIVER_MAX_ROWS`` entity and equivalence rows they are
+collected once and built on the driver by the parity-tested twins into
+small local relations, so each stage pays one broadcast instead of
+re-running the explode+groupBy and connected-components sub-DAGs;
+above the bound the distributed operators stay the scale path.
 """
 
 from __future__ import annotations
@@ -25,14 +34,17 @@ from __future__ import annotations
 import os
 import time
 from dataclasses import dataclass, field
+from functools import cached_property
 
-from pyspark.sql import DataFrame, SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.canonicalize import entity_component_map
+from .operators.bounded import DRIVER_MAX_ROWS, bounded_collect
+from .operators.canonicalize import entity_component_map, entity_component_map_rows
 from .operators.detect import detect_mentions, detect_records_from_pages
 from .operators.extract import extracted_text
-from .operators.link import link_mentions, surface_dictionary
+from .operators.link import link_mentions, surface_dictionary, surface_dictionary_rows
 from .operators.segment import packed_records
 from .operators.triples import canonicalized_triples, emit_triples
 
@@ -55,6 +67,67 @@ def _lineage_rows(spark: SparkSession, out_dir: str, stage: str, df: DataFrame, 
         .withColumn("ts", F.current_timestamp())
     )
     counts.write.mode("append").parquet(os.path.join(out_dir, "_lineage"))
+
+
+class DimensionTables:
+    """The surface dictionary and the entity → canonical component map,
+    resolved together on first use and then reused.
+
+    Entities and equivalences of at most ``DRIVER_MAX_ROWS`` rows each
+    are collected once (``bounded_collect``) and turned into local
+    relations by the driver twins ``link.surface_dictionary_rows`` and
+    ``canonicalize.entity_component_map_rows`` (parity pytest-asserted
+    against the distributed operators).  Over the bound the tables are
+    the distributed ``surface_dictionary`` / ``entity_component_map``
+    plans, unchanged.
+    """
+
+    def __init__(self, entities: DataFrame, equivalences: DataFrame):
+        self.entities = entities
+        self.equivalences = equivalences
+
+    @cached_property
+    def _rows(self) -> tuple[list[Row] | None, list[Row] | None]:
+        """(entity rows, equivalence rows), each None over the bound."""
+        return (
+            bounded_collect(
+                self.entities.select("entity_id", "canonical_name", "aliases", "label_type"),
+                DRIVER_MAX_ROWS,
+            ),
+            bounded_collect(
+                self.equivalences.select("surface_a", "surface_b"), DRIVER_MAX_ROWS
+            ),
+        )
+
+    def _local_relation(self, rows: list[tuple], ddl: str) -> DataFrame:
+        """Driver rows as a LocalRelation, built through Arrow: a
+        ``createDataFrame`` of a python list is an RDD that every scan
+        (each broadcast build) re-pickles through a Python worker."""
+        columns = [f.split()[0] for f in ddl.split(",")]
+        return self.entities.sparkSession.createDataFrame(
+            pd.DataFrame(rows, columns=columns), ddl
+        )
+
+    @cached_property
+    def dictionary(self) -> DataFrame:
+        """(surface, label_type, entity_id)."""
+        ents, _ = self._rows
+        if ents is None:
+            return surface_dictionary(self.entities)
+        return self._local_relation(
+            surface_dictionary_rows(ents),
+            "surface string, label_type string, entity_id long",
+        )
+
+    @cached_property
+    def component_map(self) -> DataFrame:
+        """(entity_id, canonical_id)."""
+        ents, eqs = self._rows
+        if ents is None or eqs is None:
+            return entity_component_map(self.equivalences, self.dictionary)
+        return self._local_relation(
+            entity_component_map_rows(eqs, ents), "entity_id long, canonical_id long"
+        )
 
 
 class KGPipeline:
@@ -82,6 +155,7 @@ class KGPipeline:
         self.lang = lang
         self.out_dir = out_dir
         self._weights_bc = None
+        self.dimensions = DimensionTables(entities, equivalences)
 
     @property
     def weights_bc(self):
@@ -132,12 +206,12 @@ class KGPipeline:
         return records, mentions
 
     def linked(self, mentions: DataFrame) -> DataFrame:
-        return link_mentions(mentions, self.entities)
+        return link_mentions(
+            mentions, self.entities, dictionary=self.dimensions.dictionary
+        )
 
     def component_map(self) -> DataFrame:
-        return entity_component_map(
-            self.equivalences, surface_dictionary(self.entities)
-        )
+        return self.dimensions.component_map
 
     def triples(self, linked: DataFrame, records: DataFrame) -> DataFrame:
         raw = emit_triples(linked, records, self.rules)
@@ -146,18 +220,24 @@ class KGPipeline:
     # --- orchestration --------------------------------------------------
 
     def _stage(self, name: str, build, times: dict[str, float]) -> DataFrame:
-        """Materialize-or-resume one stage (compute-if-absent)."""
+        """Materialize-or-resume one stage (compute-if-absent).
+
+        A freshly written snapshot is read back once, with the schema it
+        was written with: inferring a parquet schema is a Spark job of
+        its own.  A resumed snapshot infers it."""
         if self.out_dir is None:
             return build()
         path = os.path.join(self.out_dir, name)
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            t0 = time.monotonic()
-            df = build()
-            df.write.mode("overwrite").parquet(path)
-            wall_ms = (time.monotonic() - t0) * 1000
-            times[name] = wall_ms
-            _lineage_rows(self.spark, self.out_dir, name, self.spark.read.parquet(path), wall_ms)
-        return self.spark.read.parquet(path)
+        if os.path.exists(os.path.join(path, "_SUCCESS")):
+            return self.spark.read.parquet(path)
+        t0 = time.monotonic()
+        df = build()
+        df.write.mode("overwrite").parquet(path)
+        wall_ms = (time.monotonic() - t0) * 1000
+        times[name] = wall_ms
+        snapshot = self.spark.read.schema(df.schema).parquet(path)
+        _lineage_rows(self.spark, self.out_dir, name, snapshot, wall_ms)
+        return snapshot
 
     def run(self, pages: DataFrame) -> PipelineResult:
         times: dict[str, float] = {}

@@ -25,10 +25,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from ..broadcast import weights_broadcast
-from ..operators.canonicalize import entity_component_map
 from ..operators.detect import detect_records_from_pages
-from ..operators.link import surface_dictionary
 from ..operators.triples import emit_triples_narrow
+from ..pipeline import DimensionTables
 from ..sources.pages import PAGES_SCHEMA
 
 
@@ -66,15 +65,17 @@ def incremental_triples(
     """Start (and return) a streaming query appending triples for every
     new pages parquet file under ``pages_dir``.
 
-    Dimension tables are resolved once at start (they are slowly
-    changing; restart the query to pick up a new dictionary snapshot).
+    Dimension tables are resolved once at start, on the driver when
+    they fit its bound (pipeline.DimensionTables); they are slowly
+    changing, so restart the query to pick up a new dictionary snapshot.
     """
     import pyspark.sql.functions as F
 
     bc = weights_broadcast(spark)
-    cmap = entity_component_map(equivalences, surface_dictionary(entities)).cache()
-    cmap.count()
-    entities = entities.cache()
+    dims = DimensionTables(entities, equivalences)
+    # cached, so that over the bound the distributed tables are computed
+    # once and not once per micro-batch
+    dictionary, cmap = dims.dictionary.cache(), dims.component_map.cache()
     rules = rules.cache()
 
     triples_path = os.path.join(out_dir, "triples")
@@ -83,7 +84,7 @@ def incremental_triples(
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         zh = batch_df.filter(F.col("lang") == lang).select("url", "html")
         rm = detect_records_from_pages(zh, bc)
-        triples = emit_triples_narrow(rm, rules, entities, cmap)
+        triples = emit_triples_narrow(rm, rules, entities, cmap, dictionary=dictionary)
         write_epoch(triples, triples_path, epoch_id)
 
     stream = (

@@ -1263,6 +1263,27 @@ def test_quality_lr_separates_planted(spark):
     assert selection.quality_lr_scores(with_empty, labels2).count() == 17
 
 
+def test_quality_lr_rejects_non_finite_weights(spark):
+    """An inf/nan weight cannot ride the from_json literal (Jackson does
+    not parse it, and PERMISSIVE from_json would turn every score
+    NULL): a diverged training run raises instead.  lr=inf sends every
+    weight to ±inf (or nan) after the first round."""
+    from pyspark.sql import functions as SF
+
+    from knowledgeextraction_spark.operators import selection
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma w{i}") for i in range(4)]
+        + [(100 + i, f"uno dos tres v{i}") for i in range(4)],
+        "doc_id long, text string",
+    )
+    labels = docs.select(
+        "doc_id", (SF.col("doc_id") < 100).cast("double").alias("y")
+    )
+    with pytest.raises(ValueError, match="non-finite"):
+        selection.quality_lr_scores(docs, labels, n_iter=2, lr=float("inf"))
+
+
 def test_round_half_up_matches_spark_round(spark):
     """r06: _round_half_up (the driver-combine rounding twin) must
     equal Catalyst F.round(double, dp) — including the HALF_UP tie

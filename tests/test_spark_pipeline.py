@@ -334,3 +334,140 @@ def test_distributed_components_match_driver_path(spark, corpus):
         (r["id"], r["component"]) for r in connected_components(e).collect()
     }
     assert dist == local and len(dist) > 0
+
+
+def _jobs_in_group(spark, group: str, fn) -> int:
+    """Spark jobs ``fn`` launches, counted under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_driver_dimensions_match_distributed(spark, corpus, monkeypatch):
+    """KGPipeline's driver-resident dimension tables (under
+    DRIVER_MAX_ROWS) and the distributed operators (bound forced to 0)
+    give identical linked mentions and triples."""
+    from knowledgeextraction_spark import pipeline
+
+    pages = fixture_pages(spark, corpus)
+
+    def run():
+        pipe = KGPipeline(
+            spark,
+            entities=entities_df(spark, corpus.entities),
+            rules=rules_df(spark, corpus.rules),
+            equivalences=equivalences_df(spark, corpus.equivalences),
+        )
+        result = pipe.run(pages)
+        linked = {tuple(r) for r in result.linked.collect()}
+        triples = {tuple(r) for r in result.triples.collect()}
+        return linked, triples, pipe.dimensions
+
+    linked_d, triples_d, dims_d = run()
+    monkeypatch.setattr(pipeline, "DRIVER_MAX_ROWS", 0)
+    linked_s, triples_s, dims_s = run()
+
+    assert dims_d._rows[0] is not None and dims_d._rows[1] is not None
+    assert dims_s._rows == (None, None)
+    assert linked_d == linked_s and len(linked_d) > 0
+    assert triples_d == triples_s and len(triples_d) > 0
+
+
+def test_driver_dimensions_job_budget(spark, corpus, tmp_path):
+    """Resolving the dimension tables and writing the triples stage
+    stays within 10 Spark jobs (9 on this fixture; the distributed
+    operators, with the bound forced to 0, take 19)."""
+    pages = fixture_pages(spark, corpus)
+
+    def build():
+        return KGPipeline(
+            spark,
+            entities=entities_df(spark, corpus.entities),
+            rules=rules_df(spark, corpus.rules),
+            equivalences=equivalences_df(spark, corpus.equivalences),
+        )
+
+    first = build().run(pages)
+    first.records.write.parquet(str(tmp_path / "records"))
+    first.linked.write.parquet(str(tmp_path / "linked"))
+    records = spark.read.parquet(str(tmp_path / "records"))
+    linked = spark.read.parquet(str(tmp_path / "linked"))
+
+    pipe = build()
+
+    def dims_and_triples():
+        pipe.dimensions.dictionary
+        pipe.triples(linked, records).write.parquet(str(tmp_path / "triples"))
+
+    jobs = _jobs_in_group(spark, "dims+triples", dims_and_triples)
+    assert jobs <= 10, jobs
+    got = {tuple(r) for r in spark.read.parquet(str(tmp_path / "triples")).collect()}
+    assert got == {tuple(r) for r in first.triples.collect()}
+
+
+def test_connected_components_driver_path_is_one_job(spark):
+    """Under driver_threshold the size probe and the collect are one
+    bounded_collect: the driver twin costs a single Spark job."""
+    from knowledgeextraction_spark.operators.canonicalize import connected_components
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (5, 4), (6, 6)], "src long, dst long"
+    )
+    out = {}
+    jobs = _jobs_in_group(
+        spark, "cc-driver", lambda: out.update(cc=connected_components(edges))
+    )
+    assert jobs == 1
+    got = {(r["id"], r["component"]) for r in out["cc"].collect()}
+    assert got == {(1, 1), (2, 1), (3, 1), (4, 4), (5, 4)}
+    dist = connected_components(edges, driver_threshold=0)
+    assert {(r["id"], r["component"]) for r in dist.collect()} == got
+
+
+def test_fresh_stage_snapshots_match_resumed(spark, corpus, tmp_path):
+    """A freshly written stage is read back once, with the schema it was
+    written with: the frames equal the resumed (schema-inferred)
+    snapshots, writing a stage launches no schema-inference job, and
+    the triples, deduplicated only after canonicalization, hold no
+    duplicate row."""
+    pages = fixture_pages(spark, corpus)
+    out = str(tmp_path / "kg")
+
+    def build():
+        return KGPipeline(
+            spark,
+            entities=entities_df(spark, corpus.entities),
+            rules=rules_df(spark, corpus.rules),
+            equivalences=equivalences_df(spark, corpus.equivalences),
+            out_dir=out,
+        )
+
+    fresh = build().run(pages)
+    resumed = build().run(pages)
+    assert resumed.stage_times == {}
+    for name in ("records", "mentions", "linked", "triples"):
+        a, b = getattr(fresh, name), getattr(resumed, name)
+        assert a.schema == b.schema, name
+        assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect())), name
+    assert fresh.triples.count() == fresh.triples.distinct().count() > 0
+
+    # resumed, a stage is one read that infers the schema; fresh, it is
+    # the snapshot write, then the lineage rows' aggregate and write
+    # (two jobs under adaptive execution), with no read-back job
+    pipe = build()
+    jobs = _jobs_in_group(
+        spark, "records-stage",
+        lambda: pipe._stage("records", lambda: fresh.records, {}),
+    )
+    assert jobs == 1, jobs
+    pipe.out_dir = str(tmp_path / "kg2")
+    jobs = _jobs_in_group(
+        spark, "records-stage-fresh",
+        lambda: pipe._stage("records", lambda: fresh.records, {}),
+    )
+    assert jobs <= 3, jobs
